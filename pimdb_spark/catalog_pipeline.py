@@ -388,15 +388,16 @@ _ZORDER_ORACLE = f"""
 def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) clustering key over (customer, order-day)
     (functions/zorder.zorder_key_2d): the multi-dimensional layout key
-    behind plans/store.write_zordered — files sorted by this key have
+    behind ``write_sorted(db, df, table, zorder_key_2d(a, b))``
+    (plans/store) — files sorted by this key have
     small bounding boxes in BOTH dimensions, so parquet min/max stats
     prune range filters on either.  Pure JVM bit arithmetic (parallel-
     prefix spreads, shifts, ors); the oracle runs the textually identical
     bit expressions, so a hash match proves exact key parity.
 
     Scale: zero-shuffle projection; the clustered write built on it costs
-    one range exchange (tests/test_build.py asserts the bounding-box
-    property)."""
+    one range exchange (tests/test_linkage_zorder.py asserts the
+    bounding-box property)."""
     from pimdb_spark.functions.zorder import zorder_key_2d
 
     orders = load(spark, sf_dir, "orders")

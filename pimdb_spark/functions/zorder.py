@@ -5,8 +5,10 @@ gives every parquet file a small bounding box in ALL interleaved
 dimensions, so min/max footer statistics prune range filters on any of
 them — where a plain sort only prunes its leading column.  This is the
 Spark-expression form of the layout Delta/Iceberg expose as OPTIMIZE
-ZORDER BY; here it composes with plans/store.write_sorted (range-exchange
-on the z key + sortWithinPartitions).
+ZORDER BY; here the key is write_sorted's sort column:
+``write_sorted(db, df, table, zorder_key_2d(a, b))`` (plans/store —
+range-exchange on the z key + sortWithinPartitions; the key is never
+stored).
 
 All bit arithmetic (shifts, masks, or) happens JVM-side on longs — no
 UDF — and the identical expressions run in ANSI SQL, so a DuckDB oracle

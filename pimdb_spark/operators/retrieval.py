@@ -277,7 +277,8 @@ def sparse_doc_similarity(
 
     Scale: one gram shuffle for tf; the pair join ships (doc, gram, w,
     n2) for capped grams only; the pair groupBy keys on (doc_a, doc_b)
-    with the two norms riding as functionally dependent grouping keys —
+    alone, carrying the two norms as F.min aggregates (a double norm as a
+    grouping key could split a pair across partitions on a stage retry) —
     no post-aggregation norm join (beyond the broadcast threshold that
     join would be a pair-frame-sized sort-merge join).  max_df is the
     cost dial — exactly the knob inverted_index documents."""
@@ -293,8 +294,8 @@ def sparse_doc_similarity(
     # As a window over the doc partition the norm costs the same one
     # doc-keyed exchange the old groupBy paid, every (doc, gram) row
     # carries its norm into the gram join (+1 double on that wire), and
-    # the pair groupBy picks it up as a functionally dependent grouping
-    # key — no post-aggregation join at all.
+    # the pair groupBy carries it through as an F.min aggregate — no
+    # post-aggregation join at all.
     if scorer == "sum":
         # Accumulation order is engine-chosen in this scorer (window
         # partition order here, hash-agg order before); the declared
@@ -334,12 +335,18 @@ def sparse_doc_similarity(
         F.col("_n2").alias("_n2_b"),
     )
     pairs = a.join(b, "gram").filter(F.col("doc_a") < F.col("doc_b"))
+    # Group on the pair alone: the norms are doubles whose window sum may
+    # differ in the last ulp when a retried stage recomputes it, so as
+    # grouping keys they could hash one pair to two partitions.  They are
+    # equal within a pair, so F.min just carries them through.
+    norms = [F.min("_n2_a").alias("_n2_a"), F.min("_n2_b").alias("_n2_b")]
     if scorer == "sum":
-        dots = pairs.groupBy("doc_a", "doc_b", "_n2_a", "_n2_b").agg(
-            F.sum(F.col("w_a") * F.col("w_b")).alias("dot")
+        dots = pairs.groupBy("doc_a", "doc_b").agg(
+            F.sum(F.col("w_a") * F.col("w_b")).alias("dot"), *norms
         )
     else:
-        dots = pairs.groupBy("doc_a", "doc_b", "_n2_a", "_n2_b").agg(
+        dots = pairs.groupBy("doc_a", "doc_b").agg(
+            *norms,
             F.aggregate(
                 F.array_sort(
                     F.collect_list(

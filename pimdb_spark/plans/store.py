@@ -1,18 +1,24 @@
 """Parquet 'database' directory (SURVEY §2.1 S8/S9 and §7 architecture).
 
-A database is a directory with one parquet dataset per table.  Writing with
-mode=overwrite is the Spark form of pimdb's truncate-before-load
-(database.py:369-371); dropping obsolete tables (database.py:582-586) is
-deleting datasets not in the current table list.  Every table is registered
-as a temp view so ``spark.sql`` serves the pass-through query surface.
+A database is a directory with one parquet dataset per table.  Every
+table write — plain, hive-partitioned, bucketed, compacted, range-sorted,
+or a streaming merge — replaces its directory through ONE path,
+replace_directory(): the new files land in ``<table>.parquet.tmp`` and are
+swapped in only once complete, so readers see the old table or the new
+one, never an emptied or half-written one.  That is the crash-safe form of
+pimdb's truncate-before-load (database.py:369-371); dropping obsolete
+tables (database.py:582-586) is deleting datasets not in the current
+table list.  Every table is registered as a temp view so ``spark.sql``
+serves the pass-through query surface.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 _SWAP_OLD_SUFFIX = ".swap.old"
 
@@ -56,6 +62,25 @@ def recover_swap(path: str) -> bool:
     return True
 
 
+def replace_directory(path: str, write: Callable[[str], None]) -> None:
+    """Replace the directory at ``path`` with what ``write(tmp)`` writes.
+
+    The only way a table directory is replaced: clear a stale
+    ``<path>.tmp``, let ``write`` fill it, then swap_directory() it in.
+    The old files outlive the write, so ``write`` may read the very
+    table it replaces, and a failed write leaves the old table intact
+    and removes its own partial output."""
+    tmp = path + ".tmp"
+    if os.path.exists(tmp):
+        shutil.rmtree(tmp)
+    try:
+        write(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    swap_directory(path, tmp)
+
+
 class ParquetDatabase:
     def __init__(
         self,
@@ -95,21 +120,22 @@ class ParquetDatabase:
     def write(
         self, df: DataFrame, table: str, partition_by: str | list[str] | None = None
     ) -> None:
-        """Overwrite-write a table; ``partition_by`` hive-partitions the
-        dataset so equality/range filters on those columns prune whole
-        directories at scan time (PartitionFilters — the Spark form of
-        coarse indexing; use low-cardinality columns only, high-cardinality
-        partitioning makes small files).  Tables named in ``bucket_spec``
-        are written bucketed instead (see __init__)."""
+        """Replace a table (replace_directory); ``partition_by``
+        hive-partitions the dataset so equality/range filters on those
+        columns prune whole directories at scan time (PartitionFilters —
+        the Spark form of coarse indexing; use low-cardinality columns
+        only, high-cardinality partitioning makes small files).  Tables
+        named in ``bucket_spec`` are written bucketed instead (see
+        __init__)."""
         if table in self.bucket_spec:
             cols, n = self.bucket_spec[table]
             self._write_bucketed(df, table, cols, n)
             return
-        w = df.write.mode("overwrite")
+        w = df.write
         if partition_by:
             cols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
             w = w.partitionBy(*cols)
-        w.parquet(self.path(table))
+        replace_directory(self.path(table), w.parquet)
 
     def _write_bucketed(
         self, df: DataFrame, table: str, bucket_cols: str | list[str], num_buckets: int
@@ -121,40 +147,35 @@ class ParquetDatabase:
         within-bucket sort).  sortBy the same key so downstream sort-merge
         joins skip their Sort as well as their Exchange.
 
-        The write lands in a temp path under a temp catalog name first and
-        is swapped in only once complete (swap_directory), so a crash
-        mid-write leaves the old table intact and ``df`` may safely read
-        from the very table being replaced — the old files are never
-        deleted before the new ones exist (the failure mode compact()'s
-        docstring warns about).  The final catalog entry is re-created
-        over the swapped-in files via external-table DDL, preserving the
-        bucket metadata."""
+        bucketBy needs saveAsTable, so the files are written under a temp
+        catalog name; that entry and the final one are both EXTERNAL
+        (dropping them is metadata-only).  The final entry is re-created
+        over the swapped-in files via DDL, preserving the bucket
+        metadata."""
         cols = [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
         name = self._catalog_name(table)
         tmp_name = name + "_swaptmp"
         path = self.path(table)
-        tmp_path = path + ".bucket.tmp"
-        self.spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-        if os.path.exists(tmp_path):
-            shutil.rmtree(tmp_path)
-        (
-            df.repartition(num_buckets, *cols)
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(num_buckets, *cols)
-            .sortBy(*cols)
-            .option("path", tmp_path)
-            .saveAsTable(tmp_name)
-        )
+
+        def write(tmp: str) -> None:
+            self.spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
+            (
+                df.repartition(num_buckets, *cols)
+                .write.mode("overwrite")
+                .format("parquet")
+                .bucketBy(num_buckets, *cols)
+                .sortBy(*cols)
+                .option("path", tmp)
+                .saveAsTable(tmp_name)
+            )
+            self.spark.sql(f"DROP TABLE {tmp_name}")
+
         schema_ddl = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in self.spark.table(tmp_name).schema.fields
+            f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
         )
-        swap_directory(path, tmp_path)
-        # both entries are EXTERNAL: dropping them is metadata-only
-        self.spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-        self.spark.sql(f"DROP TABLE IF EXISTS {name}")
+        replace_directory(path, write)
         bucket_cols_sql = ", ".join(f"`{c}`" for c in cols)
+        self.spark.sql(f"DROP TABLE IF EXISTS {name}")
         self.spark.sql(
             f"CREATE TABLE {name} ({schema_ddl}) USING PARQUET "
             f"CLUSTERED BY ({bucket_cols_sql}) SORTED BY ({bucket_cols_sql}) "
@@ -247,38 +268,31 @@ class ParquetDatabase:
         scheduling + footer reads, lost column-chunk locality).  The file
         count comes from the table's CURRENT on-disk size — measured, not
         guessed — and the rewrite is one narrow coalesce stage (no
-        shuffle) followed by a directory swap (swap_directory), so a
-        reader sees the old or the new table, never a half-written mix;
-        a crash mid-swap is repaired by recover_swap().
+        shuffle) written through write(), so a reader sees the old or the
+        new table, never a half-written mix.
 
-        Bucketed tables keep their layout: the rewrite goes through
-        _write_bucketed (bucket count fixes the file count, so
-        ``target_file_mb`` is ignored and num_buckets is returned) —
-        swapping plain files under a still-registered bucketed catalog
-        entry would make the bucketed scan reject the non-bucket-named
-        files and quietly invalidate shuffle-free join plans."""
+        Bucketed tables keep their layout: write() re-buckets them, so the
+        bucket count fixes the file count (``target_file_mb`` is ignored
+        and num_buckets is returned)."""
         if table in self.bucket_spec:
-            cols, n = self.bucket_spec[table]
-            self._write_bucketed(self.read(table), table, cols, n)
-            return int(n)
-        path = self.path(table)
-        size_b = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(path)
-            for f in files
-            if f.endswith(".parquet")
-        )
-        n_files = max(1, -(-size_b // (target_file_mb * 1024 * 1024)))
-        tmp = path + ".compact.tmp"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        self.spark.read.parquet(path).coalesce(int(n_files)).write.parquet(tmp)
-        swap_directory(path, tmp)
-        return int(n_files)
+            n_files = self.bucket_spec[table][1]
+        else:
+            size_b = sum(
+                os.path.getsize(os.path.join(root, f))
+                for root, _, files in os.walk(self.path(table))
+                for f in files
+                if f.endswith(".parquet")
+            )
+            n_files = max(1, -(-size_b // (target_file_mb * 1024 * 1024)))
+        self.write(self.read(table).coalesce(n_files), table)
+        return n_files
 
 
 def write_sorted(
-    db: "ParquetDatabase", df: DataFrame, table: str, sort_cols: str | list[str],
+    db: "ParquetDatabase",
+    df: DataFrame,
+    table: str,
+    sort_cols: str | Column | list[str | Column],
     num_files: int | None = None,
 ) -> None:
     """Range-partition + sort-within-partitions write: rows are globally
@@ -290,6 +304,11 @@ def write_sorted(
     One range-exchange (sampled boundaries); ``num_files`` bounds the
     output file count.
 
+    A sort column may be an expression: ``zorder_key_2d(a, b)``
+    (functions/zorder) clusters on a Morton key, so every file covers a
+    small bounding box in BOTH dimensions and min/max stats prune range
+    filters on either; the key is never stored.
+
     A range-sorted layout REPLACES a bucketed one: if ``table`` was in
     the database's bucket_spec, the catalog's bucketed entry is dropped
     and the spec entry removed, so later read()s return the plain
@@ -298,69 +317,9 @@ def write_sorted(
     if table in db.bucket_spec:
         db.spark.sql(f"DROP TABLE IF EXISTS {db._catalog_name(table)}")
         db.bucket_spec.pop(table, None)
-    cols = [sort_cols] if isinstance(sort_cols, str) else list(sort_cols)
+    cols = list(sort_cols) if isinstance(sort_cols, (list, tuple)) else [sort_cols]
     out = (
         df.repartitionByRange(*([num_files] if num_files else []), *cols)
         .sortWithinPartitions(*cols)
     )
-    out.write.mode("overwrite").parquet(db.path(table))
-
-
-def write_zordered(
-    db: "ParquetDatabase",
-    df: DataFrame,
-    table: str,
-    dim_a,
-    dim_b,
-    num_files: int | None = None,
-) -> None:
-    """Z-order clustered write: interleave two dimensions into a Morton
-    key (functions/zorder.zorder_key_2d — pure JVM bit expressions) and
-    range-cluster on it via write_sorted.  Every output file then covers
-    a small bounding box in BOTH dimensions, so min/max footer stats
-    prune range filters on either — the multi-dimensional generalization
-    of the single-column sorted layout.  ``dim_a``/``dim_b`` are column
-    expressions already normalized to non-negative 16-bit ranges
-    (``F.col(k) % 65536``, or a precomputed rank for continuous values).
-
-    Scale: one projection + one range exchange — identical cost to
-    write_sorted, strictly better pruning for two-dimensional access
-    patterns."""
-    from pimdb_spark.functions.zorder import zorder_key_2d
-
-    if table in db.bucket_spec:
-        db.spark.sql(f"DROP TABLE IF EXISTS {db._catalog_name(table)}")
-        db.bucket_spec.pop(table, None)
-    keyed = df.withColumn("_zkey", zorder_key_2d(dim_a, dim_b))
-    out = (
-        keyed.repartitionByRange(*([num_files] if num_files else []), "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")  # projection preserves the per-file clustering
-    )
-    out.write.mode("overwrite").parquet(db.path(table))
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: str | list[str],
-    num_buckets: int,
-    sort_cols: str | list[str] | None = None,
-) -> None:
-    """Persist ``df`` as a bucketed (and optionally sort-within-bucket)
-    parquet table in the session catalog.
-
-    Bucketing is the Spark replacement for the reference's join-key indexes
-    (SURVEY §4): two tables bucketed on the same key with the same bucket
-    count join WITHOUT any shuffle — each task zips bucket i with bucket i.
-    At 100 TB this turns the fact⋈fact join (e.g. orders⋈lineitem on
-    orderkey) from the dominant shuffle into a local merge; sortBy
-    additionally removes the sort from sort-merge joins."""
-    cols = [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
-    writer = (
-        df.write.mode("overwrite").format("parquet").bucketBy(num_buckets, *cols)
-    )
-    if sort_cols:
-        s = [sort_cols] if isinstance(sort_cols, str) else list(sort_cols)
-        writer = writer.sortBy(*s)
-    writer.saveAsTable(table)
+    db.write(out, table)

@@ -53,23 +53,22 @@ def merge_batch(
 
     The merged frame is fully written to a TEMP directory while the
     current table is still intact on disk, then swapped in
-    (store.swap_directory).  Never read-then-overwrite-in-place: that
+    (store.replace_directory).  Never read-then-overwrite-in-place: that
     relies on a cache staying resident for correctness — evicted blocks
     or a lost executor mid-write would recompute the merge from input
     files the overwrite already deleted, corrupting the table.  (With
     Delta/Iceberg this becomes MERGE INTO and the rewrite is confined to
     touched files.)"""
-    from pimdb_spark.plans.store import recover_swap, swap_directory
+    from pimdb_spark.plans.store import recover_swap, replace_directory
 
     if not updates.take(1):
         return
-    recover_swap(table_path)  # repair any crash mid-swap from a prior batch
+    path = table_path.rstrip("/")
+    recover_swap(path)  # repair any crash mid-swap from a prior batch
     best = latest_per_key(updates, key_cols, version_col)
-    base = spark.read.parquet(table_path)
+    base = spark.read.parquet(path)
     merged = snapshot_merge(base, best.select(*base.columns), key_cols)
-    tmp = table_path.rstrip("/") + ".merge.tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    swap_directory(table_path, tmp)
+    replace_directory(path, merged.write.parquet)
 
 
 def incremental_refresh(

@@ -269,6 +269,47 @@ def test_compact_bucketed_preserves_layout_and_self_read(spark, tmp_path):
     assert "Exchange" not in plan, plan[:2000]
 
 
+def test_write_replaces_table_from_filtered_self_read(spark, tmp_path):
+    """A table rewritten from a filtered read of itself keeps exactly the
+    filtered rows: the new files are complete before the old ones go, so
+    the job never reads a file the write already deleted."""
+    from pimdb_spark.plans.store import ParquetDatabase
+
+    db = ParquetDatabase(spark, str(tmp_path / "db"))
+    db.write(spark.range(100).withColumnRenamed("id", "k"), "t")
+    db.write(db.read("t").filter("k < 50"), "t")
+    assert sorted(r.k for r in db.read("t").collect()) == list(range(50))
+
+
+def test_failed_write_keeps_previous_table(spark, tmp_path):
+    """A write whose job fails leaves the previous table readable with all
+    its rows, and leaves no temp or swap debris in the database dir."""
+    import os
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from pimdb_spark.plans.store import ParquetDatabase
+
+    @F.udf("long")
+    def fail_on_seven(k):
+        if k == 7:
+            raise ValueError("row 7 is poisoned")
+        return k
+
+    db = ParquetDatabase(spark, str(tmp_path / "db"))
+    db.write(spark.range(100).withColumnRenamed("id", "k"), "t")
+    with pytest.raises(Exception):
+        db.write(spark.range(100).select(fail_on_seven("id").alias("k")), "t")
+    got = db.read("t")
+    assert got.count() == 100
+    assert got.agg({"k": "sum"}).first()[0] == sum(range(100))
+    debris = [
+        f for f in os.listdir(db.db_dir) if f.endswith((".tmp", ".swap.old"))
+    ]
+    assert debris == []
+
+
 def test_write_sorted_drops_stale_bucket_entry(spark, tmp_path):
     """write_sorted over a previously-bucketed table replaces the layout:
     the bucketed catalog entry must be dropped so read() returns the plain

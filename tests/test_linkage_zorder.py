@@ -74,7 +74,8 @@ def test_write_zordered_bounding_boxes(spark, tmp_path):
     range filters on either dimension."""
     from pyspark.sql import functions as F
 
-    from pimdb_spark.plans.store import ParquetDatabase, write_zordered
+    from pimdb_spark.functions.zorder import zorder_key_2d
+    from pimdb_spark.plans.store import ParquetDatabase, write_sorted
 
     db = ParquetDatabase(spark, str(tmp_path / "db"))
     n = 20_000
@@ -85,7 +86,7 @@ def test_write_zordered_bounding_boxes(spark, tmp_path):
             (F.hash((F.col("id") + 1).cast("long")).bitwiseAND(F.lit(0x7FFFFFFF)) % 4096).alias("y"),
         )
     )
-    write_zordered(db, df, "t", F.col("x"), F.col("y"), num_files=16)
+    write_sorted(db, df, "t", zorder_key_2d(F.col("x"), F.col("y")), num_files=16)
     files = sorted(glob.glob(db.path("t") + "/part-*.parquet"))
     assert len(files) >= 8
     fractions = []
@@ -107,7 +108,7 @@ def test_write_zordered_bounding_boxes(spark, tmp_path):
     avg_y = sum(f[1] for f in fractions) / len(fractions)
     assert avg_x < 0.8 and avg_y < 0.8
     assert min(avg_x, avg_y) < 0.6
-    # stored schema is clean: the transient _zkey column is dropped
+    # stored schema is clean: the Morton key is a sort expression, not a column
     assert spark.read.parquet(db.path("t")).columns == ["x", "y"]
 
 

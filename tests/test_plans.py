@@ -425,27 +425,32 @@ def test_grouping_analytics_expand(spark):
 def test_bucketed_join_no_shuffle(spark, tmp_path):
     """Two tables bucketed on the join key with equal bucket counts must
     join with ZERO exchanges — the 100 TB co-located-join path."""
-    from pimdb_spark.plans.store import write_bucketed
+    from pimdb_spark.plans.store import ParquetDatabase
 
     o = spark.read.parquet(f"{SF}/orders.parquet")
     li = spark.read.parquet(f"{SF}/lineitem.parquet")
-    write_bucketed(o.select("o_orderkey", "o_orderstatus"), "b_orders", "o_orderkey", 4)
-    write_bucketed(li.select("l_orderkey", "l_quantity"), "b_lineitem", "l_orderkey", 4)
+    db = ParquetDatabase(
+        spark,
+        str(tmp_path / "db"),
+        bucket_spec={"b_orders": ("o_orderkey", 4), "b_lineitem": ("l_orderkey", 4)},
+    )
+    db.write(o.select("o_orderkey", "o_orderstatus"), "b_orders")
+    db.write(li.select("l_orderkey", "l_quantity"), "b_lineitem")
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         # disable broadcast so the bucketed path (not a broadcast) is chosen
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("b_lineitem").join(
-            spark.table("b_orders"),
-            spark.table("b_lineitem").l_orderkey == spark.table("b_orders").o_orderkey,
+        b_lineitem, b_orders = db.read("b_lineitem"), db.read("b_orders")
+        joined = b_lineitem.join(
+            b_orders, b_lineitem.l_orderkey == b_orders.o_orderkey
         )
         plan = plan_of(joined)
         assert count_op(plan, "Exchange") == 0
         assert joined.count() > 0
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
+        db.drop("b_orders")
+        db.drop("b_lineitem")
 
 
 def test_partitioned_write_prunes(spark, tmp_path):
@@ -921,7 +926,7 @@ def test_cms_heavy_hitters_one_pass_no_hash_join(spark):
         cms_heavy_hitter_candidates(toks, "item", width=64, depth=3, min_est=100)
     )
     tree = plan.split("\n\n")[0]
-    assert tree.count("Scan parquet") == 2, plan
+    assert count_op(plan, "Scan") == 2, plan
     for j in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"):
         assert j not in tree, plan
     assert count_op(plan, "BroadcastNestedLoopJoin") == 1, plan
