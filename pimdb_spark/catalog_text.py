@@ -698,6 +698,11 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over the SAME component partition (identical distinct set, size
     # compare unchanged) — no labels-frame join to re-attach the audit
     # flag; one component exchange serves the audit and the output.
+    # Skew exposure: the window puts a whole component on one task, which
+    # buffers and sorts all its rows, so a single giant leaky component —
+    # the case the audit exists to catch — is a skew hotspot (a groupBy
+    # countDistinct would partially aggregate it).  The window measured
+    # faster at sf0.1 only.
     return labeled.withColumn(
         "leaky_doc_level",
         F.size(F.collect_set("split_doc").over(Window.partitionBy("component")))

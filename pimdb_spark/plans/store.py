@@ -10,6 +10,18 @@ pimdb's truncate-before-load (database.py:369-371); dropping obsolete
 tables (database.py:582-586) is deleting datasets not in the current
 table list.  Every table is registered as a temp view so ``spark.sql``
 serves the pass-through query surface.
+
+A table is resolved once per on-disk VERSION, the ``(st_ino,
+st_mtime_ns)`` of its directory (table_version()): read() reuses the
+parquet schema it last saw for that version instead of running a footer
+job to infer it again, and register_all() re-creates only the views whose
+table changed.  The key is sound because replace_directory() always
+swaps in a NEW directory, so every replace — by this object, by
+streaming/refresh.merge_batch, or by another process — changes the
+inode.  That is why every table replace must keep going through
+replace_directory(): an in-place overwrite or append into a table
+directory keeps its inode and moves only its mtime (not at all for files
+added under an existing partition subdirectory).
 """
 
 from __future__ import annotations
@@ -19,8 +31,18 @@ import shutil
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 _SWAP_OLD_SUFFIX = ".swap.old"
+
+# a table directory's (st_ino, st_mtime_ns); None while it is missing
+Version = tuple[int, int] | None
+
+# session UUID -> lower-cased view name -> (table path, table version) of
+# the view register_all() last created there.  Keyed by session, not by
+# database: temp views are session state, and two databases in one
+# session that share a table name share its view.
+_SESSION_VIEWS: dict[str, dict[str, tuple[str, Version]]] = {}
 
 
 def swap_directory(path: str, tmp: str) -> None:
@@ -81,6 +103,34 @@ def replace_directory(path: str, write: Callable[[str], None]) -> None:
     swap_directory(path, tmp)
 
 
+def table_version(path: str) -> Version:
+    """On-disk version of the table directory at ``path``: its inode and
+    mtime, or None if it is missing.  One stat, no Spark job."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None
+    return st.st_ino, st.st_mtime_ns
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """Spark's DataType.asNullable: every field, array element and map
+    value nullable — the schema a file source reads back."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _session_views(spark: SparkSession) -> dict[str, tuple[str, Version]]:
+    return _SESSION_VIEWS.setdefault(spark._jsparkSession.sessionUUID(), {})
+
+
 class ParquetDatabase:
     def __init__(
         self,
@@ -110,6 +160,8 @@ class ParquetDatabase:
         self._bkt_prefix = (
             "bkt_" + hashlib.md5(db_dir.encode()).hexdigest()[:8] + "_"
         )
+        # table -> (table_version, schema) of a plain or partitioned table
+        self._schemas: dict[str, tuple[Version, StructType]] = {}
 
     def path(self, table: str) -> str:
         return os.path.join(self.db_dir, f"{table}.parquet")
@@ -126,7 +178,12 @@ class ParquetDatabase:
         the Spark form of coarse indexing; use low-cardinality columns
         only, high-cardinality partitioning makes small files).  Tables
         named in ``bucket_spec`` are written bucketed instead (see
-        __init__)."""
+        __init__).
+
+        A plain write leaves the frame's schema, made nullable, as the
+        table's schema for the new version, so the next read() runs no
+        footer job.  A partitioned table is inferred on its first read:
+        Spark types partition columns from the directory names."""
         if table in self.bucket_spec:
             cols, n = self.bucket_spec[table]
             self._write_bucketed(df, table, cols, n)
@@ -135,7 +192,10 @@ class ParquetDatabase:
         if partition_by:
             cols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
             w = w.partitionBy(*cols)
-        replace_directory(self.path(table), w.parquet)
+        path = self.path(table)
+        replace_directory(path, w.parquet)
+        if not partition_by:
+            self._schemas[table] = (table_version(path), _as_nullable(df.schema))
 
     def _write_bucketed(
         self, df: DataFrame, table: str, bucket_cols: str | list[str], num_buckets: int
@@ -208,17 +268,45 @@ class ParquetDatabase:
         df.write.mode(mode).jdbc(url, jdbc_table or table, properties=dict(properties))
 
     def read(self, table: str) -> DataFrame:
+        """A fresh relation over the table's current files (so DataFrame
+        self-joins keep distinct attribute ids); a bucketed table with a
+        catalog entry reads through the catalog.
+
+        The schema is inferred (one Spark job reading a parquet footer)
+        only the first time a table version is read; later reads of that
+        version pass the remembered schema.  The version is taken BEFORE
+        the files are listed and checked again after, so a replace racing
+        the read costs a later inference, never a schema that does not
+        belong to the listed files."""
         if table in self.bucket_spec:
             name = self._catalog_name(table)
             if self.spark.catalog.tableExists(name):
                 return self.spark.table(name)
-        return self.spark.read.parquet(self.path(table))
+        path = self.path(table)
+        version = table_version(path)
+        cached = self._schemas.get(table)
+        if cached is not None and cached[0] == version:
+            df = self.spark.read.schema(cached[1]).parquet(path)
+            if table_version(path) == version:
+                return df
+        df = self.spark.read.parquet(path)
+        self._schemas[table] = (version, df.schema)
+        return df
 
     def exists(self, table: str) -> bool:
         return os.path.exists(self.path(table))
 
     def drop(self, table: str) -> None:
+        """Delete the table, and the session view register_all() made of
+        it, so a later query on the name fails as "not found" rather than
+        on missing files."""
         self.spark.sql(f"DROP TABLE IF EXISTS {self._catalog_name(table)}")
+        views = _session_views(self.spark)
+        view = views.get(table.lower())
+        if view is not None and view[0] == self.path(table):
+            self.spark.catalog.dropTempView(table)
+            del views[table.lower()]
+        self._schemas.pop(table, None)
         if self.exists(table):
             shutil.rmtree(self.path(table))
 
@@ -233,8 +321,23 @@ class ParquetDatabase:
                 self.drop(t)
 
     def register_all(self) -> None:
+        """Register every table as a session temp view named after it.
+
+        A view pins the file listing it was created with, so it must be
+        re-created whenever its table is replaced — and only then: a view
+        is re-created only if its (path, table_version) differs from what
+        was last registered under that name in this session, so a query
+        over unchanged tables runs no Spark job here.  This relies on
+        every replace going through replace_directory() (see the module
+        docstring); a view replaced or dropped by code outside the store
+        is not noticed."""
+        views = _session_views(self.spark)
         for t in self.table_names():
-            self.read(t).createOrReplaceTempView(t)
+            path = self.path(t)
+            key = (path, table_version(path))
+            if views.get(t.lower()) != key:
+                self.read(t).createOrReplaceTempView(t)
+                views[t.lower()] = key
 
     def sql(self, query: str) -> DataFrame:
         self.register_all()

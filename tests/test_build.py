@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 
 def rows(df, *cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
@@ -286,7 +288,6 @@ def test_failed_write_keeps_previous_table(spark, tmp_path):
     its rows, and leaves no temp or swap debris in the database dir."""
     import os
 
-    import pytest
     from pyspark.sql import functions as F
 
     from pimdb_spark.plans.store import ParquetDatabase
@@ -327,6 +328,166 @@ def test_write_sorted_drops_stale_bucket_entry(spark, tmp_path):
     assert "t" not in db.bucket_spec
     got = db.read("t")
     assert got.count() == 2_000
+
+
+def spark_jobs(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def count_views_created(spark, monkeypatch) -> list[str]:
+    """Names passed to createOrReplaceTempView from now on."""
+    created: list[str] = []
+    cls = type(spark.range(1))
+    original = cls.createOrReplaceTempView
+
+    def spy(df, name):
+        created.append(name)
+        return original(df, name)
+
+    monkeypatch.setattr(cls, "createOrReplaceTempView", spy)
+    return created
+
+
+@pytest.mark.parametrize("replace", ["db_write", "replace_directory"])
+def test_replaced_table_shows_new_columns_and_rows(spark, tmp_path, replace):
+    """After a table is replaced — through the database, or by a writer
+    that bypasses it — read() and sql() both see the new version, even
+    though the old version's schema and view were already resolved."""
+    from pimdb_spark.plans.store import ParquetDatabase, replace_directory
+
+    db = ParquetDatabase(spark, str(tmp_path / "db"))
+    db.write(spark.range(3).withColumnRenamed("id", "k"), "t")
+    assert rows(db.read("t"), "k") == [(0,), (1,), (2,)]
+    assert [tuple(r) for r in db.sql("select * from t order by k").collect()] == [
+        (0,), (1,), (2,)
+    ]
+
+    new = spark.range(10, 12).selectExpr("id as k", "cast(id * 2 as string) as v")
+    if replace == "db_write":
+        db.write(new, "t")
+    else:
+        replace_directory(db.path("t"), new.write.parquet)
+
+    want = [(10, "20"), (11, "22")]
+    got = db.read("t")
+    assert got.columns == ["k", "v"]
+    assert rows(got, "k", "v") == want
+    assert [tuple(r) for r in db.sql("select * from t order by k").collect()] == want
+
+
+def test_register_all_recreates_only_changed_views(spark, tmp_path, monkeypatch):
+    """A second register_all over unchanged tables runs no Spark job and
+    re-creates no view; after one table is rewritten, only its view is
+    re-created."""
+    from pimdb_spark.plans.store import ParquetDatabase
+
+    db = ParquetDatabase(spark, str(tmp_path / "db"))
+    for t in ("a", "b", "c"):
+        df = spark.range(5).withColumnRenamed("id", "k")
+        df.write.parquet(db.path(t))  # written outside the db: nothing cached
+    db.register_all()
+
+    created = count_views_created(spark, monkeypatch)
+    assert spark_jobs(spark, db.register_all) == 0
+    assert created == []
+
+    db.write(spark.range(7).withColumnRenamed("id", "k"), "b")
+    db.register_all()
+    assert created == ["b"]
+    assert spark.sql("select count(*) from b").first()[0] == 7
+
+
+def test_read_of_written_table_runs_no_job(spark, tmp_path):
+    """A table this process just wrote reads back with no footer job, and
+    with exactly the schema Spark infers from its files."""
+    from pimdb_spark.plans.store import ParquetDatabase
+
+    db = ParquetDatabase(spark, str(tmp_path / "db"))
+    df = spark.range(4).selectExpr(
+        "id",
+        "cast(id as int) as i",
+        "array(id, null) as a",
+        "map('k', id) as m",
+        "named_struct('x', id, 'y', array(named_struct('z', 1))) as st",
+        "cast(id as decimal(10, 2)) as d",
+        "current_timestamp() as ts",
+    )
+    db.write(df, "t")
+    got = []
+    assert spark_jobs(spark, lambda: got.append(db.read("t"))) == 0
+    assert got[0].schema == spark.read.parquet(db.path("t")).schema
+    assert got[0].count() == 4
+
+
+def test_partitioned_table_keeps_inferred_partition_types(spark, tmp_path):
+    """Spark types a partition column from its directory names (bigint
+    ``p`` reads back as int), so a partitioned table's schema is the
+    inferred one both before and after it is cached."""
+    from pimdb_spark.plans.store import ParquetDatabase
+
+    db = ParquetDatabase(spark, str(tmp_path / "db"))
+    db.write(spark.range(9).selectExpr("id", "id % 3 as p"), "t", partition_by="p")
+    inferred = spark.read.parquet(db.path("t")).schema
+    assert dict((f.name, f.dataType.simpleString()) for f in inferred)["p"] == "int"
+    assert db.read("t").schema == inferred  # first read: inferred and cached
+    got = []
+    assert spark_jobs(spark, lambda: got.append(db.read("t"))) == 0
+    assert got[0].schema == inferred
+    assert rows(got[0], "id", "p") == [(i, i % 3) for i in range(9)]
+
+
+def test_two_databases_same_table_name_in_one_session(spark, tmp_path):
+    """Each database's sql() sees its own table ``t`` even when another
+    database registered a view of the same name in between."""
+    from pimdb_spark.plans.store import ParquetDatabase
+
+    db1 = ParquetDatabase(spark, str(tmp_path / "db1"))
+    db2 = ParquetDatabase(spark, str(tmp_path / "db2"))
+    db1.write(spark.range(0, 3).withColumnRenamed("id", "k"), "t")
+    db2.write(spark.range(100, 102).withColumnRenamed("id", "k"), "t")
+    for db, want in ((db1, [0, 1, 2]), (db2, [100, 101]), (db1, [0, 1, 2])):
+        assert sorted(r.k for r in db.sql("select * from t").collect()) == want
+
+
+def test_drop_removes_registered_view(spark, tmp_path):
+    """drop()/drop_obsolete() remove the view register_all() made of the
+    table, so a later query reports "not found" instead of failing on
+    deleted files; another database's view of the same name stays."""
+    from pyspark.errors import AnalysisException
+
+    from pimdb_spark.plans.store import ParquetDatabase
+
+    db = ParquetDatabase(spark, str(tmp_path / "db"))
+    other = ParquetDatabase(spark, str(tmp_path / "other"))
+    for t in ("t", "u"):
+        db.write(spark.range(3).withColumnRenamed("id", "k"), t)
+    other.write(spark.range(5).withColumnRenamed("id", "k"), "w")
+    assert db.sql("select count(*) from t").first()[0] == 3
+    assert other.sql("select count(*) from w").first()[0] == 5
+
+    db.drop("t")
+    with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
+        db.sql("select * from t").collect()
+
+    db.write(spark.range(2).withColumnRenamed("id", "k"), "w")
+    assert db.sql("select count(*) from w").first()[0] == 2
+    db.drop_obsolete(keep=["w"])
+    with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
+        db.sql("select * from u").collect()
+    other.write(spark.range(6).withColumnRenamed("id", "k"), "w")
+    db.drop("w")  # the view ``w`` is now other's: it stays
+    assert other.sql("select count(*) from w").first()[0] == 6
 
 
 def test_ensure_worker_code_ships_once(spark):
